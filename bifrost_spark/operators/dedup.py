@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
+from bifrost_spark.operators.driver_fold import collect_bounded, local_relation
 from bifrost_spark.operators.partitioning import spread as _spread
 
 
@@ -426,17 +428,25 @@ def connected_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 20
 ) -> DataFrame:
     """Connected components over near-dup pairs → (id, component) with
-    component = min id in the component.
+    component = min id in the component, one row per id in any pair.
 
-    Iterative min-label propagation: every vertex starts as its own label;
-    each round pulls the minimum label across neighbors; converged when no
-    label changes.  Rounds needed = component diameter — near-dup clusters
-    are small and dense, so this converges in 2-4 rounds in practice (the
-    driver loop runs one count() per round, which is how iterative
-    algorithms look on Spark; each round is a self-contained shuffle-join
-    stage over |edges|).  Results are cached per round and the lineage cut
-    with localCheckpoint so the plan doesn't grow unboundedly.
+    Pairs that fit under ``DRIVER_FOLD_ROWS`` (one bounded collect) are
+    folded on the driver: union-find whose roots are the min id, returned
+    as an Arrow-backed local relation — no job per round, no per-round plan
+    to compile.  Near-dup pair sets are |near-dups|, not |docs|², so this is
+    the common case.
+
+    Larger pair sets (``pairs`` is computed again) run iterative min-label
+    propagation: every vertex starts as its own label; each round pulls the
+    minimum label across neighbors; converged when no label changes.
+    Rounds needed = component diameter — near-dup clusters are small and
+    dense, so this converges in 2-4 rounds in practice (one count() per
+    round; each round one shuffle-join stage over |edges|).  Each round's
+    labels are localCheckpointed so the plan doesn't grow unboundedly.
     """
+    local = collect_bounded(pairs.select(id_a, id_b))
+    if local is not None:
+        return _union_find_components(pairs, local, id_a)
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -449,6 +459,7 @@ def connected_components(
         .withColumn("component", F.col("id"))
         .cache()
     )
+    initial = labels
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.src == labels.id)
@@ -476,7 +487,32 @@ def connected_components(
             "(component diameter exceeds max_iter); raise max_iter"
         )
     edges.unpersist()
+    initial.unpersist()
     return labels
+
+
+def _union_find_components(pairs: DataFrame, rows: list, id_a: str) -> DataFrame:
+    """The driver fold of :func:`connected_components` over collected
+    (id_a, id_b) rows."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    id_type = pairs.schema[id_a].dataType
+    schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+    return local_relation(
+        pairs.sparkSession, {"id": ids, "component": [find(v) for v in ids]}, schema
+    )
 
 
 def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

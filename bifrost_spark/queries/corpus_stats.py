@@ -25,8 +25,9 @@ runs before (and after) building an LLM dataset:
 Round-10 additions (VERDICT r9 item 2 + the type-side fit):
 
 * **q_bpe_train** — the multi-iteration BPE trainer: K=5 learned merges
-  via a driver-side loop of bounded JVM jobs over the Heaps-bounded
-  vocabulary table (q_bpe_merges is its single-step candidate queue);
+  over the Heaps-bounded vocabulary table, folded on the driver when the
+  vocabulary is small and as bounded JVM jobs when it is not
+  (q_bpe_merges is its single-step candidate queue);
 * **q_heaps_fit** — the Heaps-law V(n) ≈ K·n^β log-log OLS over the
   shared q_vocab_growth decile curve — q_zipf_fit's companion on the
   type-inventory side.
@@ -45,8 +46,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from bifrost_spark.operators.dedup import token_gram_hashes, word_array
+from bifrost_spark.operators.driver_fold import collect_bounded, local_relation
 from bifrost_spark.queries.llm_text import VOCAB_GROWTH_SQL
 from bifrost_spark.registry import query
 from bifrost_spark.tables import load_table
@@ -548,6 +551,14 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BPE_TRAIN_K = 5
+_BPE_SCHEMA = StructType(
+    [
+        StructField("step", LongType()),
+        StructField("p1", StringType()),
+        StructField("p2", StringType()),
+        StructField("pair_freq", LongType()),
+    ]
+)
 # Oracle symbol wrappers (chr(1)/chr(2)): the DuckDB side applies each
 # merge with replace() over individually-wrapped symbols, so adjacent
 # matches share no characters and left-to-right non-overlapping
@@ -622,15 +633,16 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output is the learned merge list itself, the artifact a
     tokenizer-training pipeline persists.
 
-    The Spark shape is the real trainer's shape: the corpus is read ONCE
-    (word-count aggregate, map-side combined); every iteration runs on
-    the DISTINCT-vocabulary table (Heaps-bounded, localCheckpointed so
-    the loop's lineage stays flat) as a driver-side loop of K bounded
-    JVM jobs — pair explode, one hash aggregate, a 1-row TakeOrdered
-    collect (the house bounded-model-fold pattern), and an in-row array
-    fold applying the merge.  Nothing per-iteration touches text.
+    The corpus is folded to the DISTINCT (word, wc) vocabulary (one
+    map-side-combined aggregate), which is Heaps-bounded, and every
+    iteration runs on that.  A vocabulary under ``DRIVER_FOLD_ROWS`` is
+    gathered by one bounded collect and the K merges are learned on the
+    driver (:func:`_bpe_merges_local`); a larger one is aggregated again
+    and runs the same iterations as K bounded Spark jobs
+    (:func:`_bpe_merges_spark`).  Either way the merge list returns as an
+    Arrow-backed local relation.
 
-    Merge application is a fold over the symbol array: append each
+    Merge application is a fold over the symbol sequence: append each
     symbol, or replace the accumulator's tail with the merged symbol
     when (tail, current) equals the learned pair — greedy left-to-right
     by construction ("aaaa" + merge(a,a) → [aa, aa], never [aa, a, a]).
@@ -651,6 +663,53 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wc"))
     )
+    local = collect_bounded(words)
+    if local is not None:
+        merges = _bpe_merges_local(local, _BPE_TRAIN_K)
+    else:
+        merges = _bpe_merges_spark(words, _BPE_TRAIN_K)
+    columns = {f: [m[i] for m in merges] for i, f in enumerate(_BPE_SCHEMA.names)}
+    return local_relation(spark, columns, _BPE_SCHEMA)
+
+
+def _bpe_apply(syms: list[str], a: str, b: str) -> list[str]:
+    """Greedy left-to-right, non-overlapping application of merge (a, b)."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == a and s == b:
+            out[-1] = a + b
+        else:
+            out.append(s)
+    return out
+
+
+def _bpe_merges_local(vocab: list[tuple[str, int]], k: int) -> list[tuple[int, str, str, int]]:
+    """The first ``k`` BPE merges over a (word, count) vocabulary, on the
+    driver: the exact twin of :func:`_bpe_merges_spark`.  Symbols are code
+    points plus the end-of-word marker, as Spark's substr splits them, and
+    the (f DESC, p1, p2) order is Spark's: Python compares strings by code
+    point, which is the order of their UTF-8 bytes."""
+    seqs = [(list(word) + [_BPE_EOW], wc) for word, wc in vocab]
+    merges: list[tuple[int, str, str, int]] = []
+    for step in range(1, k + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for syms, wc in seqs:
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + wc
+        if not counts:
+            break
+        (p1, p2), f = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, p1, p2, f))
+        seqs = [(_bpe_apply(syms, p1, p2), wc) for syms, wc in seqs]
+    return merges
+
+
+def _bpe_merges_spark(words: DataFrame, k: int) -> list[tuple[int, str, str, int]]:
+    """The first ``k`` BPE merges over a (word, wc) frame too large for the
+    driver: K bounded JVM jobs over the localCheckpointed vocabulary — pair
+    explode, one hash aggregate, a 1-row TakeOrdered collect — and an
+    in-row array fold applying each merge.  Nothing per-iteration touches
+    text."""
     ln = F.length("word")
     init_syms = F.concat(
         F.transform(
@@ -680,7 +739,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, _BPE_TRAIN_K + 1):
+    for step in range(1, k + 1):
         top = (
             vocab.select(
                 "wc", F.explode(adjacent_pairs(F.col("syms"))).alias("p")
@@ -719,9 +778,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = vocab.select(
             "wc", apply_merge(F.col("syms")).alias("syms")
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, schema="step bigint, p1 string, p2 string, pair_freq bigint"
-    )
+    return merges
 
 
 # ---------------------------------------------------------------------------

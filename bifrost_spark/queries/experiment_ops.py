@@ -700,16 +700,21 @@ def ph_walk(
     wcum = wd.rowsBetween(Window.unboundedPreceding, 0)
     zero = Decimal(0)
     t = (F.lit(int(t0)) + F.row_number().over(wd)).cast("bigint")
+    # The window sums are cast back to DECIMAL(28,12) before the carry is
+    # added: SUM(DECIMAL(28,12)) is DECIMAL(38,12), and adding a (28,12)
+    # carry to it needs 39 digits, which Spark meets by dropping to scale
+    # 11 — every sum would round to 11 decimals, and a continued walk,
+    # rounding once more per batch, would leave the single-shot walk.
     sum_m = (
         F.lit(sum_m0 if sum_m0 is not None else zero).cast(_D2812)
-        + F.sum(F.col("m").cast(_D2812)).over(wcum)
+        + F.sum(F.col("m").cast(_D2812)).over(wcum).cast(_D2812)
     ).cast(_D2812)
     idx = daily.select("day", "m", t.alias("t"), sum_m.alias("sum_m"))
     xbar = F.round(F.col("sum_m").cast("double") / F.col("t"), 12)
     addend = F.round(F.col("m") - xbar - F.lit(_PH_DELTA), 12).cast(_D2812)
     sum_add = (
         F.lit(sum_add0 if sum_add0 is not None else zero).cast(_D2812)
-        + F.sum(addend).over(wcum)
+        + F.sum(addend).over(wcum).cast(_D2812)
     ).cast(_D2812)
     walk = idx.select(
         "day", "m", "t", "sum_m", sum_add.alias("sum_add")

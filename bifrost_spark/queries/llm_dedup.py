@@ -245,9 +245,11 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the exact-Jaccard
     pairs, component labeled by its min doc_id — the step after pair
     generation in every dedup pipeline (keep one doc per component, drop
-    the rest).  Iterative min-label propagation (operators/dedup.py);
-    rounds = component diameter, each round one shuffle join over |edges|.
-    Oracle: DuckDB recursive CTE reachability."""
+    the rest).  operators/dedup.py connected_components: pair sets under
+    DRIVER_FOLD_ROWS are gathered by one bounded collect and labeled by
+    union-find on the driver; larger ones run iterative min-label
+    propagation (rounds = component diameter, each round one shuffle join
+    over |edges|).  Oracle: DuckDB recursive CTE reachability."""
     d = load_table(spark, sf_dir, "documents")
     sh = char_shingles(d, "text", "doc_id", k=SHINGLE_K)
     pairs = exact_jaccard_pairs(

@@ -82,6 +82,15 @@ def get_spark(app_name: str = "bifrost_spark", shuffle_partitions: int | None = 
         .config("spark.driver.memory", os.environ.get("BIFROST_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Generated-class cache (default 100 entries).  Measured at sf0.001:
+        # at 100, every warm pass of the 11-id perfbench queries mix
+        # recompiled ~340 classes compiled one pass earlier (Janino, then
+        # HotSpot JIT again per new class), and a second pass over all 273
+        # registered ids 4,361.  4096 holds the whole surface (~2,900
+        # classes): 0 and 44 recompiles, for ~20 MB more driver metaspace.
+        # A static conf: a session handed in through tune_for_oracle keeps
+        # Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # files.maxPartitionBytes default 128m is right for the 100 TB target;
         # local small-SF files are single-partition anyway.
     )

@@ -88,15 +88,22 @@ edge_lists = st.lists(
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edge_lists)
-def test_connected_components_equals_union_find(spark, edges):
+def test_connected_components_equals_union_find(spark, monkeypatch, edges):
+    """Both paths: the driver fold, and (bound 0) the Spark propagation loop."""
+    from bifrost_spark.operators import driver_fold
     from bifrost_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "id_a long, id_b long"
     ).distinct()
-    got = {
-        (r.id, r.component) for r in connected_components(pairs, max_iter=30).collect()
-    }
+    got = {}
+    for bound in (driver_fold.DRIVER_FOLD_ROWS, 0):
+        with monkeypatch.context() as m:
+            m.setattr(driver_fold, "DRIVER_FOLD_ROWS", bound)
+            got[bound] = {
+                (r.id, r.component)
+                for r in connected_components(pairs, max_iter=30).collect()
+            }
 
     parent: dict[int, int] = {}
 
@@ -113,7 +120,32 @@ def test_connected_components_equals_union_find(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     verts = {v for e in edges for v in e}
     truth = {(v, find(v)) for v in verts}
-    assert got == truth
+    assert got == {driver_fold.DRIVER_FOLD_ROWS: truth, 0: truth}
+
+
+# Words over an alphabet with ASCII, Latin-1, a BMP character above the
+# surrogate block and an astral one: UTF-16 order (Java's String.compareTo)
+# would put U+1D518 before U+FF21, code-point order (Python, and Spark's
+# UTF-8 binary order) after it, so a tie between them catches the wrong one.
+bpe_vocabs = st.dictionaries(
+    st.text(alphabet="ab\u00e4\uff21\U0001d518", min_size=1, max_size=6),
+    st.integers(1, 4),
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(vocab=bpe_vocabs, k=st.integers(1, 8))
+@example(vocab={"aaaa": 1}, k=3)  # greedy: merge(a,a) gives [aa, aa], then a tie
+@example(vocab={"ab": 2, "ba": 2}, k=2)  # equal counts: (p1, p2) order decides
+@example(vocab={"\uff21\U0001d518": 1, "\U0001d518\uff21": 1}, k=1)
+@example(vocab={"ab": 1}, k=5)  # exhausted after two merges
+def test_bpe_driver_fold_equals_spark_loop(spark, vocab, k):
+    from bifrost_spark.queries.corpus_stats import _bpe_merges_spark, _bpe_merges_local
+
+    words = spark.createDataFrame(list(vocab.items()), "word string, wc bigint")
+    assert _bpe_merges_local(list(vocab.items()), k) == _bpe_merges_spark(words, k)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))

@@ -107,6 +107,59 @@ def test_executed_plan_scan_count(spark, sf_dir, name):
     )
 
 
+# query -> max Spark jobs fired while its DataFrame is BUILT (checkpoints,
+# collects), counted on a warm build: the first load of a fixture table
+# fires one schema-inference job of its own.
+BUILD_JOB_CEILINGS = {
+    "q_dedup_cluster": 9,  # the pair pipeline's checkpoints + one bounded collect
+    "q_bpe_train": 2,  # the vocabulary's shuffle stage + its bounded collect
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOB_CEILINGS))
+def test_build_job_count(spark, sf_dir, name):
+    sc = spark.sparkContext
+    registry.queries()[name](spark, sf_dir)  # warm the table plans
+    group = f"build-jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        registry.queries()[name](spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= BUILD_JOB_CEILINGS[name], (
+        f"{name}: {n} jobs fired while building (ceiling {BUILD_JOB_CEILINGS[name]})"
+    )
+
+
+# The perfbench queries mix, less q_dup_span_exact: its second run can
+# compile a few whole-stage classes again, because the ids AQE gives its
+# codegen stages (part of each generated class) depend on which of its
+# concurrent shuffle stages finishes first.
+WARM_COMPILE_IDS = (
+    "q_dedup_cluster", "q_bpe_train", "q_rerank_mmr", "q_jaccard_ppjoin",
+    "q_fuzzy_join", "q_negative_sampling", "q_bootstrap_ci", "q_agg_hash",
+    "q_tpch21", "q_composite_report",
+)
+
+
+def test_second_run_compiles_no_new_classes(spark, sf_dir):
+    """Run the ids once, then again: the second run of every id finds all
+    its generated classes in the codegen cache.  Together they need more
+    classes than Spark's default cache of 100 holds, which made every
+    warm pass recompile ~340 of them."""
+    qs = registry.queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for name in WARM_COMPILE_IDS:
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    new = {}
+    for name in WARM_COMPILE_IDS:
+        c0 = compiles.getCount()
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        new[name] = compiles.getCount() - c0
+    assert not any(new.values()), f"classes compiled on the second run: {new}"
+
+
 # Full-surface pin: measured executed-plan scan counts for every OTHER
 # registered query (the curated table above documents the checkpoint-fixed
 # and inherently-multi-scan cases; this one freezes the rest).  Multi-scan

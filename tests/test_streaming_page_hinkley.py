@@ -7,6 +7,8 @@ predicate, and backfill rejection."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,6 +76,32 @@ def test_multi_batch_state_continues_bit_identically(spark, sf_dir, tmp_path):
     assert _rows(emitted) == _rows(
         registry.queries()["q_page_hinkley"](spark, sf_dir)
     )
+
+
+def test_continued_walk_equals_single_shot_walk(spark):
+    """ph_walk continued from any split's carried (t, sum_m, sum_add,
+    ph_min) equals the single-shot walk in every column.  Means carrying a
+    5 in the 12th decimal make a sum rounded to 11 decimals anywhere in the
+    carry (a DECIMAL(38,11) intermediate) show up as a changed row."""
+    from bifrost_spark.queries.experiment_ops import ph_walk
+
+    ms = [1.000000000005, 2.000000000005, 0.333333333333, 4.000000000005,
+          7.123456789015, 0.5, 9.000000000005]
+    d0 = datetime.date(2024, 1, 1)
+    days = [(d0 + datetime.timedelta(i), m) for i, m in enumerate(ms)]
+    daily = spark.createDataFrame(days, "day date, m double")
+    full = ph_walk(daily).orderBy("day").collect()
+    for cut in range(1, len(days)):
+        split = F.lit(days[cut][0])
+        last = ph_walk(daily.filter(F.col("day") < split)).orderBy(F.desc("day")).first()
+        cont = ph_walk(
+            daily.filter(F.col("day") >= split),
+            t0=last["t"],
+            sum_m0=last["sum_m"],
+            sum_add0=last["sum_add"],
+            min0=last["ph_min"],
+        )
+        assert cont.orderBy("day").collect() == full[cut:], f"split before day {cut}"
 
 
 def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
