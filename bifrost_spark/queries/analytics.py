@@ -690,9 +690,11 @@ def _ewma_scan(batches):
                     # — the unguarded recursion NaN-poisoned the rest of
                     # the series after a batch boundary)
                     if not np.isnan(x):
+                        # x == y: pandas ewm leaves a repeated value
+                        # unchanged, where the products would move it 1 ulp
                         y = (
                             x
-                            if np.isnan(y)
+                            if np.isnan(y) or x == y
                             else _EWMA_ALPHA * x + (1 - _EWMA_ALPHA) * y
                         )
                     arr[j] = y

@@ -1,4 +1,5 @@
-"""Shared replay-idempotent micro-batch sink (drift monitor, fuzzy dedup).
+"""Shared replay-idempotent micro-batch sink (drift monitor, fuzzy dedup,
+the output-carried monitors) and its Hadoop FileSystem listing.
 
 Output is PARTITIONED by batch_id and each emit dynamically overwrites
 ONLY its own partition, so a crash between sink write and checkpoint
@@ -58,38 +59,34 @@ def write_batch_partition(df: DataFrame, batch_id: int, output_path: str) -> Non
                 spark.conf.set(_MODE_KEY, prev)
 
 
-def output_exists(spark, output_path: str) -> bool:
-    """Explicit existence probe for an output-carried-state monitor's own
-    output directory (sprt_monitor, cusum_monitor, page_hinkley — one
-    public home for the family's read contract, VERDICT r9 item 4).
+def hadoop_fs(spark, path: str):
+    """(Hadoop FileSystem for ``path`` under the session's Hadoop conf, the
+    JVM view) — one spelling for every streaming module that lists, renames
+    or deletes output objects."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
 
-    The missing-path case (first batch ever) is the ONLY read failure
-    that may legally reset a cumulative walk to its zero state; any
-    other read error (transient FS fault, corrupt file) must propagate
-    so the micro-batch fails and retries instead of silently restarting
-    the walk and persisting wrong rows (ADVICE r8).
 
-    The primary probe asks the Hadoop FileSystem directly via the
-    session JVM — available on CLASSIC PySpark sessions (the grading
-    driver and every test here).  On Spark Connect sessions ``_jvm`` is
-    unavailable, so the fallback is a schema-only ``spark.read.parquet``
-    probe that treats ONLY the PATH_NOT_FOUND AnalysisException as
-    "missing" and re-raises everything else — same reset-vs-retry
-    contract, no JVM internals (ADVICE r9).
-    """
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is not None:
-        path = jvm.org.apache.hadoop.fs.Path(output_path)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(path))
-    from pyspark.errors import AnalysisException
+def batch_partitions(spark, root: str) -> dict[int, str]:
+    """``{batch_id: partition path}`` of the ``batch_id=N`` directories
+    under ``root``; empty when ``root`` does not exist.
 
-    try:
-        spark.read.parquet(output_path).schema
-        return True
-    except AnalysisException as exc:
-        if getattr(exc, "getErrorClass", lambda: None)() == "PATH_NOT_FOUND" or (
-            "PATH_NOT_FOUND" in str(exc)
-        ):
-            return False
-        raise
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, staging dirs) are
+    skipped, as Spark's file reader skips them.  Any other entry raises:
+    a root-level stray file or foreign directory means the layout is not
+    this sink's, and treating it as "no prior batches" would silently
+    reset whatever state the caller recovers from the partitions."""
+    fs, jvm = hadoop_fs(spark, root)
+    jroot = jvm.org.apache.hadoop.fs.Path(root)
+    if not fs.exists(jroot):
+        return {}
+    parts = {}
+    for st in fs.listStatus(jroot):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if not (st.isDirectory() and name.startswith("batch_id=")):
+            raise ValueError(f"{root}: {name!r} is not a batch_id= partition")
+        parts[int(name[len("batch_id="):])] = st.getPath().toString()
+    return parts

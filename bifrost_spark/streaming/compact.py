@@ -45,6 +45,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from bifrost_spark.streaming._sink import hadoop_fs
+
 _LEAF_RE = re.compile(r"^(\d{10})\.parquet$")
 _TMP_SUFFIX = ".compact-tmp"
 _MANIFEST_SUFFIX = ".compact-manifest"
@@ -57,12 +59,6 @@ class CompactStats:
     leaves_after: int = 0
     bins_written: int = 0
     bytes_rewritten: int = 0
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
 def _dir_bytes(fs, jvm, jpath) -> int:
@@ -122,7 +118,7 @@ def compact_archive(
     exceed ``target_bytes``; single-leaf bins are left untouched.  Returns
     counts for observability (the listener/metrics analog for maintenance).
     """
-    fs, jvm = _fs_for(spark, archive_root)
+    fs, jvm = hadoop_fs(spark, archive_root)
     stats = CompactStats()
     glob_pat = jvm.org.apache.hadoop.fs.Path(archive_root + "/*/*/partition=*")
     for part_status in fs.globStatus(glob_pat) or []:

@@ -5,29 +5,30 @@ the per-look counts already emitted — the always-on deployment of
 batch↔streaming pairing (centroid_drift, sketch_drift, sprt_monitor,
 cusum_monitor, page_hinkley, and now the scheduled-looks design).
 
-State device (output-carried, INTEGER increments — the sprt_monitor end
-of the carry spectrum): each emit writes the full K-row decision table
-carrying BOTH the cumulative readouts (n/conv per arm, z, boundaries,
-reject flags — the q_group_sequential output contract) and this batch's
-per-look integer increments (inc_n_a …), plus the anchor day (the
-experiment start, fixed by the FIRST batch) — partitioned by batch_id.
-The next batch recovers its per-(variant, look) cumulative cells by
-summing the increments over partitions with ``batch_id < N`` only; that
-restriction is what makes replay exactly-once (a re-run of batch N
-never reads its own half-written output; the dynamic-overwrite sink
-rewrites batch_id=N in place).  Integer sums recover EXACTLY, so the
-continued table is identical to the single-shot one — the multi-batch
-differential gate asserts set equality, not tolerance.
+State device (output-carried, INTEGER counts — streaming/_fold.py): each
+emit writes the full K-row decision table carrying the cumulative
+readouts (n/conv per arm, z, boundaries, reject flags — the
+q_group_sequential output contract), the anchor day (the experiment
+start, fixed by the FIRST batch) and the batch's min/max entry days —
+partitioned by batch_id.  Batch N reads the newest partition below N
+and differences its cumulative n_a/conv_a/n_b/conv_b over ``look`` on
+the driver to get the per-(variant, look) cells (at most 2K integers),
+adds this batch's cells and rebuilds the table.  Integer counts recover
+EXACTLY, so the continued table is identical to the single-shot one —
+the multi-batch differential gates assert set equality, not tolerance.
+Outputs written before the min_entry_day column existed also carry
+per-look ``inc_*`` columns; recovery reads neither, so a restarted
+stream continues from them.
 
-Ordering contract (the sprt_monitor guard): each micro-batch is
-USER-COMPLETE (a user's whole history arrives in one batch — the
-observation-window-closed delivery, since `converted` is undefined
-before the window closes) and batches arrive in strictly increasing
-entry-day order.  A late enrollment belongs to an already-emitted entry
-day and is a backfill correction, not a monitor update — rejected.
-The anchor day never moves after batch 0: with ordering, batch 0 holds
-the global earliest enrollment, so the look schedule matches the batch
-query's.
+Ordering contract (the fold's guard on min_entry_day against the prior
+max_entry_day): each micro-batch is USER-COMPLETE (a user's whole
+history arrives in one batch — the observation-window-closed delivery,
+since `converted` is undefined before the window closes) and batches
+arrive in strictly increasing entry-day order.  A late enrollment
+belongs to an already-emitted entry day and is a backfill correction,
+not a monitor update — rejected.  The anchor day never moves after
+batch 0: with ordering, batch 0 holds the global earliest enrollment,
+so the look schedule matches the batch query's.
 
 Determinism mirrors q_group_sequential: counts are exact integers; z
 and the PRECOMPUTED boundary literals come from the shared
@@ -43,123 +44,66 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.experiment_ops import (
-    _GS_LOOKS,
     gs_assignments,
     gs_decision_frame,
     gs_look_cells,
 )
-from bifrost_spark.streaming._sink import output_exists, write_batch_partition
+from bifrost_spark.streaming._fold import Fold
 
-_INC_COLS = ("inc_n_a", "inc_c_a", "inc_n_b", "inc_c_b")
+_Cells = list[tuple[str, int, int, int]]
 
 
-def _prior_state(
-    spark, output_path: str, batch_id: int
-) -> tuple[list[tuple[str, int, int, int]], object, object]:
-    """(cells, anchor_day, max_entry_day) over output partitions with
-    batch_id strictly below the current one: cells are the summed
-    per-(variant, look) integer increments (≤ 2K rows, driver-held).
-    Only the missing-path first-batch case resets to empty; any other
-    read error propagates so the micro-batch retries (the sprt_monitor
-    ADVICE-r8 contract)."""
-    if not output_exists(spark, output_path):
-        return [], None, None
-    prior = spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
-    rows = (
-        prior.groupBy("look")
-        .agg(
-            *[F.sum(c).alias(c) for c in _INC_COLS],
-            F.min("anchor_day").alias("anchor"),
-            F.max("max_entry_day").alias("entry_max"),
-        )
-        .collect()
-    )
-    if not rows:
-        return [], None, None
-    cells: list[tuple[str, int, int, int]] = []
-    for r in rows:
-        cells.append(("A", int(r["look"]), int(r["inc_n_a"]), int(r["inc_c_a"])))
-        cells.append(("B", int(r["look"]), int(r["inc_n_b"]), int(r["inc_c_b"])))
-    anchor = min(r["anchor"] for r in rows)
-    entry_max = max(r["entry_max"] for r in rows)
-    return cells, anchor, entry_max
+def gst_state(prior: list) -> tuple[_Cells, _dt.date | None]:
+    """(per-(variant, look) cells, anchor day) from the newest prior
+    table: its cumulative counts differenced over ``look``."""
+    cells: _Cells = []
+    prev = (0, 0, 0, 0)
+    for r in sorted(prior, key=lambda r: r["look"]):
+        cum = (r["n_a"], r["conv_a"], r["n_b"], r["conv_b"])
+        cells.append(("A", r["look"], cum[0] - prev[0], cum[1] - prev[1]))
+        cells.append(("B", r["look"], cum[2] - prev[2], cum[3] - prev[3]))
+        prev = cum
+    return cells, (prior[0]["anchor_day"] if prior else None)
 
 
 def batch_gst_update(
-    batch: DataFrame,
-    prior_cells: list[tuple[str, int, int, int]],
-    anchor: _dt.date | None,
-) -> tuple[DataFrame | None, object, object]:
-    """One micro-batch of raw events → (the full K-look decision table
-    with increment/anchor recovery columns, batch min entry day, batch
-    max entry day).  Returns (None, None, None) for a batch with no
-    attributable users."""
+    batch: DataFrame, state: tuple[_Cells, _dt.date | None]
+) -> DataFrame:
+    """One micro-batch of raw events → the full K-look decision table
+    with its anchor and the batch's min/max entry days; empty for a
+    batch with no attributable users."""
+    prior_cells, anchor = state
     spark = batch.sparkSession
     assign = gs_assignments(batch)
     bounds = assign.agg(
-        F.min(F.col("first_day").cast("date")).alias("dmin"),
-        F.max(F.col("first_day").cast("date")).alias("dmax"),
-    ).collect()[0]
-    if bounds["dmin"] is None:
-        return None, None, None
-    if anchor is None:
-        anchor = bounds["dmin"]
-    d0 = spark.createDataFrame([(anchor,)], "d0 date")
-    inc = gs_look_cells(assign, d0).localCheckpoint(eager=True)
+        F.min(F.col("first_day").cast("date")).alias("min_entry_day"),
+        F.max(F.col("first_day").cast("date")).alias("max_entry_day"),
+    ).filter(F.col("min_entry_day").isNotNull())
+    anchor_col = (
+        F.col("min_entry_day") if anchor is None else F.lit(anchor).cast("date")
+    )
+    bounds = bounds.select(
+        anchor_col.alias("anchor_day"), "min_entry_day", "max_entry_day"
+    )
+    cells = gs_look_cells(assign, bounds.select(F.col("anchor_day").alias("d0")))
     if prior_cells:
         prior = spark.createDataFrame(
             prior_cells, "variant string, look bigint, n bigint, c bigint"
         )
         cells = (
-            inc.unionByName(prior)
+            cells.unionByName(prior)
             .groupBy("variant", "look")
             .agg(
                 F.sum("n").cast("bigint").alias("n"),
                 F.sum("c").cast("bigint").alias("c"),
             )
         )
-    else:
-        cells = inc
-    table = gs_decision_frame(spark, cells)
-    inc_wide = inc.groupBy("look").agg(
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "A", F.col("n"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_n_a"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "A", F.col("c"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_c_a"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "B", F.col("n"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_n_b"),
-        F.coalesce(
-            F.sum(F.when(F.col("variant") == "B", F.col("c"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("inc_c_b"),
-    )
-    out = (
-        table.join(inc_wide, "look", "left")
-        .select(
-            "*",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(f"_{c}")
-                for c in _INC_COLS
-            ],
-        )
-        .drop(*_INC_COLS)
-    )
-    for c in _INC_COLS:
-        out = out.withColumnRenamed(f"_{c}", c)
-    out = out.withColumn("anchor_day", F.lit(anchor).cast("date")).withColumn(
-        "max_entry_day", F.lit(bounds["dmax"]).cast("date")
-    )
-    return out, bounds["dmin"], bounds["dmax"]
+    return gs_decision_frame(spark, cells).crossJoin(bounds)
+
+
+GST = Fold(
+    "gst_monitor", gst_state, batch_gst_update, ("min_entry_day", "max_entry_day")
+)
 
 
 def start_gst_monitor(
@@ -168,36 +112,7 @@ def start_gst_monitor(
     checkpoint_path: str,
 ) -> StreamingQuery:
     """Start the monitor on a stream of raw events: each micro-batch
-    derives its per-look enrollment increments, rebuilds the K-look
-    decision table from the output-carried cumulative cells, and emits
-    it to the batch_id-partitioned replay-idempotent sink."""
-
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        cells, anchor, entry_max = _prior_state(spark, output_path, batch_id)
-        update, dmin, _ = batch_gst_update(batch, cells, anchor)
-        if update is None:
-            return
-        if entry_max is not None and dmin is not None and dmin <= entry_max:
-            raise ValueError(
-                f"gst_monitor: batch {batch_id} contains entry day "
-                f"{dmin} <= last emitted entry day {entry_max}; late "
-                "enrollments are backfill corrections, not monitor "
-                "updates (ordering contract)"
-            )
-        write_batch_partition(update, batch_id, output_path)
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-__all__ = [
-    "batch_gst_update",
-    "start_gst_monitor",
-    "_GS_LOOKS",
-]
+    derives its per-look enrollment cells, rebuilds the K-look decision
+    table from the output-carried cumulative counts, and emits it to the
+    batch_id-partitioned replay-idempotent sink."""
+    return GST.start(stream, output_path, checkpoint_path)

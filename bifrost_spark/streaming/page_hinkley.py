@@ -10,20 +10,18 @@ prefix sums (no max-clamp recursion), so the output can carry the state
 EXACTLY: each emitted day row keeps its day count ``t`` (integer), the
 cumulative DECIMAL(28,12) metric sum ``sum_m`` and addend sum
 ``sum_add`` (parquet round-trips decimals losslessly), and the running
-minimum ``ph_min`` (a previously-computed double).  Batch N recovers
-the max-day row over partitions with ``batch_id < N`` and hands those
-values back to the SAME ``ph_walk`` helper — so the continued walk is
-BIT-IDENTICAL to a single-shot walk over all days, which the
-multi-batch differential gate asserts with set equality, not tolerance.
-Contrast: the SPRT twin carries integer increments and the CUSUM twin
-raw clamped doubles; PH closes the family with exact decimal carries.
+minimum ``ph_min`` (a previously-computed double).  Batch N takes the
+last day's row of the newest output partition below N
+(streaming/_fold.py) and hands those values back to the SAME ``ph_walk``
+helper — so the continued walk is BIT-IDENTICAL to a single-shot walk
+over all days, which the multi-batch differential gates assert with set
+equality, not tolerance.  Contrast: the SPRT twin carries integer
+counts and the CUSUM twin raw clamped doubles; PH closes the family
+with exact decimal carries.
 
-The ``batch_id < N`` restriction is replay exactly-once (a re-run of
-batch N never reads its own half-written output; the dynamic-overwrite
-sink rewrites batch_id=N in place).  Ordering contract and backfill
-rejection mirror the SPRT/CUSUM guards: batches carry whole days in
-nondecreasing day order; a batch whose earliest day does not strictly
-follow the last emitted day is rejected.
+Ordering contract and backfill rejection are the fold's: batches carry
+whole days in increasing day order; a batch whose earliest day does not
+strictly follow the last emitted day is rejected.
 
 No baseline artifact at all: Page-Hinkley's reference level is the
 running mean itself, which is exactly why it is the drift monitor you
@@ -33,20 +31,27 @@ can deploy on a metric with no trusted warm-up week.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.experiment_ops import ph_decisions, ph_walk
 from bifrost_spark.queries.monitor_ops import cusum_daily_frame
+from bifrost_spark.streaming._fold import Fold, newest
 
 
-def batch_ph_update(
-    batch: DataFrame, t0: int, sum_m0, sum_add0, min0
-) -> DataFrame:
+def ph_state(prior: list) -> tuple:
+    """(t, sum_m, sum_add, ph_min): the last emitted day's exact carry."""
+    last = newest(prior)
+    if last is None:
+        return 0, None, None, None
+    return last["t"], last["sum_m"], last["sum_add"], last["ph_min"]
+
+
+def batch_ph_update(batch: DataFrame, state: tuple) -> DataFrame:
     """One micro-batch of raw events → its days' PH rows continued from
     the carried (t, sum_m, sum_add, ph_min) state, with the exact state
     columns kept alongside the decision contract for the next batch's
     recovery."""
+    t0, sum_m0, sum_add0, min0 = state
     rows = ph_walk(
         # cusum_daily_frame: the shared 12-dp daily-mean spelling (the
         # batch query's _daily_means over a loaded table is identical)
@@ -61,21 +66,7 @@ def batch_ph_update(
     )
 
 
-def _prior_state(spark, output_path: str, batch_id: int):
-    """(t, sum_m, sum_add, ph_min, max_day) from the max-day row over
-    output partitions with batch_id strictly below the current one.
-    Only the missing-path first-batch case resets the walk; other read
-    errors propagate (the sprt_monitor ADVICE-r8 contract)."""
-    from bifrost_spark.streaming._sink import output_exists
-
-    if not output_exists(spark, output_path):
-        return 0, None, None, None, None
-    prior = spark.read.parquet(output_path).filter(F.col("batch_id") < batch_id)
-    row = prior.orderBy(F.desc("day")).limit(1).collect()
-    if not row:
-        return 0, None, None, None, None
-    r = row[0]
-    return int(r["t"]), r["sum_m"], r["sum_add"], float(r["ph_min"]), r["day"]
+PAGE_HINKLEY = Fold("page_hinkley", ph_state, batch_ph_update)
 
 
 def start_ph_monitor(
@@ -87,29 +78,4 @@ def start_ph_monitor(
     folds its days' means, continues the prefix-sum walk from the
     output-carried exact state, and emits per-day decision+state rows to
     the batch_id-partitioned replay-idempotent sink."""
-
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        spark = batch.sparkSession
-        t0, sm0, sa0, mn0, max_day = _prior_state(spark, output_path, batch_id)
-        update = batch_ph_update(batch, t0, sm0, sa0, mn0)
-        if max_day is not None:
-            update = update.localCheckpoint(eager=True)
-            min_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
-            if min_day is not None and min_day <= max_day:
-                raise ValueError(
-                    f"page_hinkley: batch {batch_id} contains day "
-                    f"{min_day} <= last emitted day {max_day}; late days "
-                    "are backfill corrections, not monitor updates "
-                    "(ordering contract)"
-                )
-        write_batch_partition(update, batch_id, output_path)
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return PAGE_HINKLEY.start(stream, output_path, checkpoint_path)

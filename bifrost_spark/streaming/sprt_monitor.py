@@ -4,24 +4,20 @@ emitted — the always-on deployment of ``q_sprt_monitor``
 (queries/monitor_ops.py), completing the batch↔streaming pairing family
 (centroid_drift, sketch_drift, and now the sequential-decision monitor).
 
-State device (NEW in this family): unlike the drift monitors, the SPRT
-is inherently CUMULATIVE — batch N's llr needs every prior batch's
-counts.  Instead of a state store, the running totals live in the
-monitor's OWN OUTPUT: each emit writes per-day rows carrying both the
-day increments (n_day, c_day) and the cumulative columns, partitioned by
-batch_id; the next batch recovers its offsets by summing the increments
-over partitions with ``batch_id < N`` only.  That restriction is what
-makes replay exactly-once: a re-run of batch N reads the same prior
-partitions (its own half-written output is excluded by the predicate)
-and the dynamic-overwrite sink rewrites batch_id=N in place.
+State device: the SPRT is inherently CUMULATIVE — batch N's llr needs
+every prior batch's counts.  The running totals live in the monitor's
+OWN OUTPUT (streaming/_fold.py): each emit writes per-day rows carrying
+both the day increments (n_day, c_day) and the cumulative n_cum /
+conv_cum, partitioned by batch_id.  Batch N continues from the last
+day's cumulative counts in the newest partition below N.
 
 Ordering contract: each micro-batch is USER-COMPLETE (a user's whole
 event history arrives in one batch — the "observation window closed"
 delivery every outcome-attribution pipeline uses, since a user's
 converted flag is undefined until their window closes) and batches
-arrive in nondecreasing entry-day order.  A late enrollment would
-belong to an already-emitted day and is a backfill correction, not a
-monitor update.
+arrive in increasing entry-day order.  A late enrollment would belong to
+an already-emitted day and is a backfill correction, not a monitor
+update; the fold rejects it.
 
 Determinism mirrors q_sprt_monitor: counts are exact integers, the llr
 multiplies them by PRECOMPUTED log literals (shared constants, one
@@ -32,46 +28,25 @@ double — a replayed batch emits identical rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bifrost_spark.queries.monitor_ops import arm_b_daily_enrollments, sprt_walk
-from bifrost_spark.streaming._sink import output_exists
+from bifrost_spark.streaming._fold import Fold, newest
 
 
-def batch_sprt_update(
-    batch: DataFrame, n_offset: int, c_offset: int
-) -> DataFrame:
+def sprt_state(prior: list) -> tuple[int, int]:
+    """(n, c) already walked: the last emitted day's cumulative counts."""
+    last = newest(prior)
+    return (last["n_cum"], last["conv_cum"]) if last else (0, 0)
+
+
+def batch_sprt_update(batch: DataFrame, state: tuple[int, int]) -> DataFrame:
     """One micro-batch of raw events → its arm-B daily enrollment
     increments walked forward from the prior totals."""
-    return sprt_walk(arm_b_daily_enrollments(batch), n_offset, c_offset)
+    return sprt_walk(arm_b_daily_enrollments(batch), *state)
 
 
-def _prior_state(
-    spark, output_path: str, batch_id: int
-) -> tuple[int, int, object]:
-    """(n, c, max_day) over output partitions with batch_id strictly
-    below the current one — re-running batch N therefore never reads its
-    own partial output."""
-    if not output_exists(spark, output_path):  # first batch: no output yet
-        return 0, 0, None
-    row = (
-        spark.read.parquet(output_path)
-        .filter(F.col("batch_id") < batch_id)
-        .agg(
-            F.coalesce(F.sum("n_day"), F.lit(0)).alias("n"),
-            F.coalesce(F.sum("c_day"), F.lit(0)).alias("c"),
-            F.max("day").alias("max_day"),
-        )
-        .collect()[0]
-    )
-    return int(row["n"]), int(row["c"]), row["max_day"]
-
-
-def prior_totals(spark, output_path: str, batch_id: int) -> tuple[int, int]:
-    """(n, c) already walked — see ``_prior_state``."""
-    n, c, _ = _prior_state(spark, output_path, batch_id)
-    return n, c
+SPRT = Fold("sprt_monitor", sprt_state, batch_sprt_update)
 
 
 def start_sprt_monitor(
@@ -83,39 +58,4 @@ def start_sprt_monitor(
     derives its enrollment increments, continues the walk from the
     output-carried totals, and emits per-day decision rows to the
     batch_id-partitioned replay-idempotent sink."""
-
-    def _emit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from bifrost_spark.streaming._sink import write_batch_partition
-
-        n0, c0, max_day = _prior_state(
-            batch.sparkSession, output_path, batch_id
-        )
-        update = batch_sprt_update(batch, n0, c0)
-        if max_day is not None:
-            # Multiply-consumed below (guard agg + sink write): pin it so
-            # the enrollment derivation runs once per micro-batch.
-            update = update.localCheckpoint(eager=True)
-            # Enforce the documented ordering contract (ADVICE r8): a
-            # batch whose earliest entry day does not strictly follow the
-            # last emitted day is a backfill for an already-walked day —
-            # appending it would produce non-monotone duplicate-day
-            # cumulative rows, so reject it instead of corrupting the
-            # walk.  Replay of batch N is unaffected: max_day comes from
-            # batch_id < N partitions only.
-            min_day = update.agg(F.min("day").alias("d")).collect()[0]["d"]
-            if min_day is not None and min_day <= max_day:
-                raise ValueError(
-                    f"sprt_monitor: batch {batch_id} contains entry day "
-                    f"{min_day} <= last emitted day {max_day}; late "
-                    "enrollments are backfill corrections, not monitor "
-                    "updates (ordering contract)"
-                )
-        write_batch_partition(update, batch_id, output_path)
-
-    return (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return SPRT.start(stream, output_path, checkpoint_path)

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from bifrost_spark.streaming._sink import batch_partitions, hadoop_fs
+
 
 def _latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list) -> DataFrame:
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
@@ -115,16 +117,9 @@ def compact_state(spark: SparkSession, path: str, key_cols: list[str],
     also in the base with equal order keys and content).  All paths go
     through the Hadoop FileSystem API so the same code works on object
     stores (s3a/abfss), matching the rest of the streaming layer."""
-    jvm = spark.sparkContext._jvm
-    delta_root = jvm.org.apache.hadoop.fs.Path(f"{path}/delta")
-    fs = delta_root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-
-    superseded, min_id = [], 0
-    for st in fs.listStatus(delta_root) or []:
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            superseded.append(name)
-            min_id = min(min_id, int(name.split("=", 1)[1]))
+    fs, jvm = hadoop_fs(spark, path)
+    superseded = batch_partitions(spark, f"{path}/delta")
+    min_id = min([0, *superseded])
 
     state = read_state(spark, path, key_cols, ts_col, tiebreak_cols)
     n = state.count()
@@ -135,6 +130,6 @@ def compact_state(spark: SparkSession, path: str, key_cols: list[str],
         jvm.org.apache.hadoop.fs.Path(staging),
         jvm.org.apache.hadoop.fs.Path(f"{path}/delta/batch_id={min_id - 1}"),
     )
-    for name in superseded:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/delta/{name}"), True)
+    for part in superseded.values():
+        fs.delete(jvm.org.apache.hadoop.fs.Path(part), True)
     return n

@@ -1,8 +1,9 @@
 """Gates for the streaming CUSUM monitor (streaming/cusum_monitor.py):
 exact batch parity with q_cusum_drift when all post-baseline days arrive
 in one micro-batch, bit-identical walk continuation across batches
-(output-carried RAW state), and replay idempotence of the batch_id < N
-recovery predicate — the same three gates as the SPRT twin."""
+(output-carried RAW state), and backfill rejection end to end.  The
+recovery, replay and three-batch gates shared by the four output-carried
+monitors are in test_streaming_fold.py."""
 
 from __future__ import annotations
 
@@ -11,8 +12,6 @@ from pyspark.sql import functions as F
 
 from bifrost_spark import registry
 from bifrost_spark.streaming.cusum_monitor import (
-    _prior_state,
-    batch_cusum_update,
     fit_cusum_baseline,
     start_cusum_monitor,
 )
@@ -84,26 +83,6 @@ def test_multi_batch_state_continues_bit_identically(spark, sf_dir, tmp_path):
     emitted = spark.read.parquet(out)
     assert emitted.select("batch_id").distinct().count() == 2
     assert _rows(emitted) == _rows(registry.queries()["q_cusum_drift"](spark, sf_dir))
-
-
-def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
-    from bifrost_spark.streaming._sink import write_batch_partition
-
-    base, tail, tail_days = _split_days(spark, sf_dir)
-    mu0, s0 = fit_cusum_baseline(base)
-    mid = tail_days[len(tail_days) // 2]
-    first = tail.filter(F.date_trunc("day", "ts") < F.lit(mid))
-    second = tail.filter(F.date_trunc("day", "ts") >= F.lit(mid))
-    out = str(tmp_path / "rout")
-    write_batch_partition(batch_cusum_update(first, mu0, s0, 0.0, 0.0), 0, out)
-    sp1, sn1, d1 = _prior_state(spark, out, 1)
-    write_batch_partition(batch_cusum_update(second, mu0, s0, sp1, sn1), 1, out)
-    once = _rows(spark.read.parquet(out))
-    # replay batch 1: its own partition must not feed its state
-    sp1b, sn1b, d1b = _prior_state(spark, out, 1)
-    assert (sp1b, sn1b, d1b) == (sp1, sn1, d1)
-    write_batch_partition(batch_cusum_update(second, mu0, s0, sp1b, sn1b), 1, out)
-    assert _rows(spark.read.parquet(out)) == once
 
 
 def test_backfill_batch_is_rejected(spark, sf_dir, tmp_path):

@@ -2,9 +2,9 @@
 (streaming/gst_monitor.py): exact decision-table parity with
 q_group_sequential when all enrollments arrive in one micro-batch,
 EXACT (integer-carry) continuation across entry-day-ordered batches,
-replay idempotence of the batch_id < N recovery predicate, and
-backfill rejection — the same four gates as the SPRT/CUSUM/Page-Hinkley
-twins.
+and backfill rejection end to end.  The recovery, replay and
+three-batch gates shared by the four output-carried monitors are in
+test_streaming_fold.py.
 
 The fixture corpus enrolls every user on day 1 (a single entry day
 cannot exercise multi-batch entry ordering), so these gates run on a
@@ -18,11 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bifrost_spark import registry
-from bifrost_spark.streaming.gst_monitor import (
-    _prior_state,
-    batch_gst_update,
-    start_gst_monitor,
-)
+from bifrost_spark.streaming.gst_monitor import start_gst_monitor
 from test_fuzz_oracle import _write_fixture_dir
 
 _OUT_COLS = [
@@ -126,26 +122,6 @@ def test_multi_batch_state_continues_exactly(spark, gst_dir, tmp_path):
     # the anchor day never moves after batch 0
     anchors = {r["anchor_day"] for r in emitted.select("anchor_day").collect()}
     assert len(anchors) == 1
-
-
-def test_replay_reads_only_prior_partitions(spark, gst_dir, tmp_path):
-    from bifrost_spark.streaming._sink import write_batch_partition
-
-    early, late = _split(spark, gst_dir)
-    out = str(tmp_path / "rout")
-    upd0, _, _ = batch_gst_update(early, [], None)
-    write_batch_partition(upd0, 0, out)
-    cells1, anchor1, em1 = _prior_state(spark, out, 1)
-    assert cells1 and anchor1 is not None
-    upd1, _, _ = batch_gst_update(late, cells1, anchor1)
-    write_batch_partition(upd1, 1, out)
-    once = _rows(spark.read.parquet(out).filter(F.col("batch_id") == 1))
-    # replay batch 1: its own partition must not feed its state
-    cells1b, anchor1b, em1b = _prior_state(spark, out, 1)
-    assert (sorted(cells1b), anchor1b, em1b) == (sorted(cells1), anchor1, em1)
-    upd1b, _, _ = batch_gst_update(late, cells1b, anchor1b)
-    write_batch_partition(upd1b, 1, out)
-    assert _rows(spark.read.parquet(out).filter(F.col("batch_id") == 1)) == once
 
 
 def test_backfill_batch_is_rejected(spark, gst_dir, tmp_path):

@@ -2,8 +2,9 @@
 (streaming/page_hinkley.py): exact batch parity with q_page_hinkley when
 all days arrive in one micro-batch, BIT-identical walk continuation
 across batches (exact decimal output-carried state — the strongest carry
-in the pairing family), replay idempotence of the batch_id < N recovery
-predicate, and backfill rejection."""
+in the pairing family), and backfill rejection end to end.  The
+recovery, replay and three-batch gates shared by the four output-carried
+monitors are in test_streaming_fold.py."""
 
 from __future__ import annotations
 
@@ -13,11 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bifrost_spark import registry
-from bifrost_spark.streaming.page_hinkley import (
-    _prior_state,
-    batch_ph_update,
-    start_ph_monitor,
-)
+from bifrost_spark.streaming.page_hinkley import start_ph_monitor
 from bifrost_spark.tables import load_table
 
 _OUT_COLS = ["day", "day_mean", "ph_m", "deficit", "alarm"]
@@ -102,23 +99,6 @@ def test_continued_walk_equals_single_shot_walk(spark):
             min0=last["ph_min"],
         )
         assert cont.orderBy("day").collect() == full[cut:], f"split before day {cut}"
-
-
-def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
-    from bifrost_spark.streaming._sink import write_batch_partition
-
-    ev, mid = _day_split(spark, sf_dir)
-    first = ev.filter(F.date_trunc("day", "ts") < F.lit(mid))
-    second = ev.filter(F.date_trunc("day", "ts") >= F.lit(mid))
-    out = str(tmp_path / "rout")
-    write_batch_partition(batch_ph_update(first, 0, None, None, None), 0, out)
-    t1, sm1, sa1, mn1, d1 = _prior_state(spark, out, 1)
-    write_batch_partition(batch_ph_update(second, t1, sm1, sa1, mn1), 1, out)
-    once = _rows(spark.read.parquet(out))
-    t1b, sm1b, sa1b, mn1b, d1b = _prior_state(spark, out, 1)
-    assert (t1b, sm1b, sa1b, mn1b, d1b) == (t1, sm1, sa1, mn1, d1)
-    write_batch_partition(batch_ph_update(second, t1b, sm1b, sa1b, mn1b), 1, out)
-    assert _rows(spark.read.parquet(out)) == once
 
 
 def test_backfill_batch_is_rejected(spark, sf_dir, tmp_path):

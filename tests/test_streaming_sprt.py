@@ -1,8 +1,9 @@
 """Gates for the streaming SPRT monitor (streaming/sprt_monitor.py):
 exact batch parity with q_sprt_monitor when the whole experiment arrives
 in one micro-batch, cumulative-offset continuity when user-complete
-cohorts arrive across batches, and replay idempotence of the
-output-carried state (the batch_id < N predicate).
+cohorts arrive across batches, and backfill rejection end to end.  The
+recovery, replay and three-batch gates shared by the four output-carried
+monitors are in test_streaming_fold.py.
 """
 
 from __future__ import annotations
@@ -12,11 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bifrost_spark import registry
-from bifrost_spark.streaming.sprt_monitor import (
-    batch_sprt_update,
-    prior_totals,
-    start_sprt_monitor,
-)
+from bifrost_spark.streaming.sprt_monitor import start_sprt_monitor
 from bifrost_spark.tables import load_table
 
 _OUT_COLS = ["day", "n_day", "c_day", "n_cum", "conv_cum", "llr", "decision"]
@@ -141,20 +138,6 @@ def test_multi_batch_offsets_continue_the_walk(spark, tmp_path):
     assert _rows(emitted) == _twin_rows(spark, sf)
 
 
-def test_missing_output_is_first_batch_but_corrupt_output_raises(
-    spark, tmp_path
-):
-    """ADVICE r8: ONLY the missing-path case may reset the walk to (0,0).
-    An existing-but-unreadable output must propagate, never silently
-    restart the SPRT from zero."""
-    assert prior_totals(spark, str(tmp_path / "never_written"), 5) == (0, 0)
-    bad = tmp_path / "bad_out"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with pytest.raises(Exception):
-        prior_totals(spark, str(bad), 5)
-
-
 def test_backfill_batch_is_rejected(spark, tmp_path):
     """ADVICE r8: a micro-batch whose earliest entry day does not strictly
     follow the last emitted day is a backfill correction; the monitor must
@@ -183,44 +166,3 @@ def test_backfill_batch_is_rejected(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="ordering contract"):
         q.processAllAvailable()
     q.stop()
-
-
-def test_replay_reads_only_prior_partitions(spark, sf_dir, tmp_path):
-    """Re-emitting batch 1 after its own (possibly partial) output exists
-    must compute the SAME offsets — prior_totals filters batch_id < N, so
-    the monitor's own partition never feeds its state."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    out = str(tmp_path / "rout")
-    from bifrost_spark.streaming._sink import write_batch_partition
-
-    half = ev.filter(F.col("user_id") % 2 == 0)
-    write_batch_partition(batch_sprt_update(half, 0, 0), 0, out)
-    n0, c0 = prior_totals(spark, out, 1)
-    write_batch_partition(
-        batch_sprt_update(ev.join(half.select("user_id").distinct(),
-                                  "user_id", "left_anti"), n0, c0),
-        1,
-        out,
-    )
-    once = _rows(spark.read.parquet(out))
-    # replay batch 1: offsets must ignore batch 1's own partition
-    n0b, c0b = prior_totals(spark, out, 1)
-    assert (n0b, c0b) == (n0, c0)
-    write_batch_partition(
-        batch_sprt_update(ev.join(half.select("user_id").distinct(),
-                                  "user_id", "left_anti"), n0b, c0b),
-        1,
-        out,
-    )
-    assert _rows(spark.read.parquet(out)) == once
-    # and the totals the NEXT batch would see cover both batches exactly
-    n2, c2 = prior_totals(spark, out, 2)
-    total = ev.groupBy("user_id").count().count()
-    b_users = [
-        r[0]
-        for r in ev.groupBy("user_id")
-        .agg(F.first(F.ascii(F.substring(F.md5(F.col("user_id").cast("string")), 1, 1)) % 2).alias("p"))
-        .filter(F.col("p") == 1)
-        .collect()
-    ]
-    assert n2 == len(b_users)
